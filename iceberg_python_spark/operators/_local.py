@@ -79,9 +79,12 @@ def isolated_scaled_session(spark: SparkSession, n_keys: int, per_partition: int
     (guide §2.6) while each still gets data-scaled shuffles (§2). The
     width derivation and clamp source (the PARENT's current conf) match
     :func:`scaled_shuffle` exactly, so plans are unchanged — only the
-    scoping of the conf is."""
+    scoping of the conf is. The parent width is read under the lock: a
+    sibling thread's scaled section lowers the global conf while it
+    runs, and that transient width must not become this clone's clamp."""
     sess = spark.newSession()
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with _SCALED_SHUFFLE_LOCK:
+        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sess.conf.set("spark.sql.shuffle.partitions", str(scaled_width(cur, n_keys, per_partition)))
     return sess
 

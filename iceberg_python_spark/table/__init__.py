@@ -33,6 +33,7 @@ import time
 import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, replace as _dc_replace
+from functools import cached_property
 from typing import Any, Callable, Dict, Iterable, List, Mapping, Optional, Sequence, Set, Tuple, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -214,25 +215,6 @@ def _norm_lineage_file(col: Column) -> Column:
     ).otherwise(col)
 
 
-def _with_materialized_row_ids(
-    spark: SparkSession, src: DataFrame, data_files: List[Dict[str, Any]], seqs: List[int]
-) -> DataFrame:
-    """Resolve each row's v3 _row_id on a lineage read: an already-
-    materialized _row_id column wins, else the row inherits
-    file.first_row_id + physical position (spec row-lineage inheritance).
-    ``src`` must carry _ips_file/_ips_pos and a (possibly-null) _row_id."""
-    rows = [
-        (_strip_uri_scheme(d["file_path"]), d.get("first_row_id"), int(s))
-        for d, s in zip(data_files, seqs)
-    ]
-    lmap = spark.createDataFrame(rows, "lfile: string, lfirst: long, lseq: long")
-    joined = src.join(
-        F.broadcast(lmap), _norm_lineage_file(F.col("_ips_file")) == F.col("lfile"), "left"
-    )
-    resolved = F.coalesce(F.col("_row_id"), F.col("lfirst") + F.col("_ips_pos"))
-    return joined.withColumn("_row_id", resolved).drop("lfile", "lfirst", "lseq")
-
-
 def _pos_deletes_df(spark, delete_paths) -> DataFrame:
     """All position-delete rows from a mixed set of delete files: parquet
     position deletes and/or v3 deletion-vector Puffin files, unioned to
@@ -251,6 +233,43 @@ def _pos_deletes_df(spark, delete_paths) -> DataFrame:
     for extra in parts[1:]:
         df = df.unionByName(extra)
     return df
+
+
+class _DeleteIndex:
+    """The live delete files of one snapshot, matched to data files by
+    sequence number (reference DeleteFileIndex,
+    table/delete_file_index.py:105): a position delete applies when its
+    sequence number is >= the data file's, an equality delete only when
+    it is strictly greater. Position-delete matching by sequence number
+    alone is exact because the anti-join also matches the file path.
+    Lookups are cached per data sequence number, so driver CPU is
+    O(distinct sequence numbers), not O(data files)."""
+
+    def __init__(self, entries: Iterable[Dict[str, Any]]):
+        #: (seq, path, bytes) and (seq, path, equality ids, bytes)
+        self.pos: List[Tuple[int, str, int]] = []
+        self.eq: List[Tuple[int, str, Tuple[int, ...], int]] = []
+        for e in entries:
+            d = e["data_file"]
+            size = d.get("file_size_in_bytes", -1)
+            if d.get("content", 0) == 2:
+                self.eq.append((e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), size))
+            elif d.get("content", 0) == 1:
+                self.pos.append((e["sequence_number"], d["file_path"], size))
+        self._by_seq: Dict[int, Dict[str, Tuple]] = {}
+
+    def task(self, data_file: Dict[str, Any], residual: BooleanExpression, seq: int) -> FileScanTask:
+        deletes = self._by_seq.get(seq)
+        if deletes is None:
+            pos = [(path, size) for dseq, path, size in self.pos if dseq >= seq]
+            eq = [((path, fids), size) for dseq, path, fids, size in self.eq if dseq > seq]
+            deletes = self._by_seq[seq] = {
+                "delete_files": tuple(p for p, _ in pos),
+                "delete_sizes": tuple(s for _, s in pos),
+                "eq_delete_files": tuple(k for k, _ in eq),
+                "eq_delete_sizes": tuple(s for _, s in eq),
+            }
+        return FileScanTask(data_file, residual, sequence_number=seq, **deletes)
 
 
 @dataclass
@@ -436,6 +455,122 @@ def _read_data(
             us = us.cast("timestamp_ntz")
         df = df.withColumn(name, us)
     return df
+
+
+def _read_tasks(
+    spark: SparkSession,
+    metadata: TableMetadata,
+    tasks: Sequence[FileScanTask],
+    target: Schema,
+    lineage: bool = False,
+    row_ids: bool = False,
+) -> DataFrame:
+    """The one task reader: every scan, count, incremental scan and
+    rewrite turns FileScanTasks into rows here (reference ArrowScan /
+    _task_to_record_batches, io/pyarrow.py).
+
+    Tasks are grouped by (file schema id, format, name map, applicable
+    equality deletes). Each group is read under its commit-time schema
+    (name-mapped files under their physical column names), position
+    deletes are anti-joined on (_metadata.file_path, row_index), the
+    group is projected onto ``target`` by field id (renames, promotions,
+    added columns — reference ArrowProjectionVisitor io/pyarrow.py:1931)
+    and its equality deletes are anti-joined on the aligned key columns.
+    Equality deletes are part of the group key because they apply to a
+    file only when strictly newer; the position-delete anti-join is exact
+    under any grouping (file paths are disjoint).
+
+    - ``lineage`` keeps ``_ips_file``/``_ips_pos``: the physical file URI
+      and row position, captured on the scan relation because the
+      ``_metadata`` pseudo-column is not resolvable after a union.
+      ``_metadata.row_index`` is parquet-only in Spark: other formats get
+      a NULL position, and position deletes over them raise.
+    - ``row_ids`` adds the v3 ``_row_id`` (a materialized id wins, else
+      the file's first_row_id + position: spec row-lineage inheritance)
+      and ``_last_updated_sequence_number`` (the file's data sequence
+      number)."""
+    from pyspark.sql import types as T
+
+    lineage_cols = ["_ips_file", "_ips_pos"] if lineage else []
+    row_id_cols = ["_row_id", "_last_updated_sequence_number"] if row_ids else []
+    if not tasks:
+        extra = [
+            T.StructField(c, T.StringType() if c == "_ips_file" else T.LongType())
+            for c in row_id_cols + lineage_cols
+        ]
+        return spark.createDataFrame([], T.StructType(target.to_spark().fields + extra))
+    groups: Dict[Tuple, List[FileScanTask]] = {}
+    for t in tasks:
+        key = (
+            t.data_file.get("schema_id", target.schema_id),
+            t.data_file.get("file_format", "PARQUET").upper(),
+            tuple(sorted((t.data_file.get("name_map") or {}).items())),
+            t.eq_delete_files,
+        )
+        groups.setdefault(key, []).append(t)
+    threshold = _delete_broadcast_threshold(metadata)
+    keep_pos = lineage or row_ids
+    dfs = []
+    for (schema_id, fmt, name_map, eq_set), group in groups.items():
+        file_schema = metadata.schema_by_id(schema_id)
+        if name_map:
+            renames = dict(name_map)
+            file_schema = Schema(
+                *[_dc_replace(f, name=renames.get(f.field_id, f.name)) for f in file_schema.fields],
+                schema_id=file_schema.schema_id,
+            )
+        df = _read_data(
+            spark,
+            file_schema,
+            fmt,
+            [t.file_path for t in group],
+            # materialized v3 ids (rewrites preserve them); NULL where absent
+            extra_spark_fields=[T.StructField("_row_id", T.LongType())] if row_ids else (),
+        )
+        delete_paths = sorted({p for t in group for p in t.delete_files})
+        if delete_paths or keep_pos:
+            if fmt == "PARQUET":
+                pos = F.col("_metadata.row_index")
+            elif delete_paths:
+                raise NotImplementedError(
+                    f"position deletes over {fmt} data files need per-row positions, "
+                    "which Spark's reader only exposes for parquet (_metadata.row_index)"
+                )
+            else:
+                pos = F.lit(None).cast("long")
+            df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
+        if delete_paths:
+            # broadcast-hinted only under the metadata size threshold
+            dels = _pos_deletes_df(spark, delete_paths)
+            df = df.join(
+                _maybe_broadcast(dels, _pos_delete_total_bytes(group), threshold),
+                (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
+                "left_anti",
+            )
+        passthrough = (["_row_id"] if row_ids else []) + (["_ips_file", "_ips_pos"] if keep_pos else [])
+        df = _align_to_schema(df, file_schema, target, passthrough=passthrough)
+        if eq_set:
+            df = _apply_equality_deletes(
+                spark, df, eq_set, target, sizes=_eq_delete_size_map(group), threshold=threshold
+            )
+        dfs.append(df)
+    out = dfs[0]
+    for extra_df in dfs[1:]:
+        out = out.unionByName(extra_df)
+    if row_ids:
+        # per-file lineage bases broadcast-join on the scheme-normalized path
+        lmap = spark.createDataFrame(
+            [(_strip_uri_scheme(t.file_path), t.data_file.get("first_row_id"), t.sequence_number) for t in tasks],
+            "lfile: string, lfirst: long, lseq: long",
+        )
+        out = out.join(F.broadcast(lmap), _norm_lineage_file(F.col("_ips_file")) == F.col("lfile"), "left")
+        out = out.select(
+            *target.column_names,
+            F.coalesce(F.col("_row_id"), F.col("lfirst") + F.col("_ips_pos")).alias("_row_id"),
+            F.col("lseq").alias("_last_updated_sequence_number"),
+            *lineage_cols,
+        )
+    return out
 
 
 class Table:
@@ -1350,20 +1485,13 @@ class Transaction:
             extra_columns=extra_columns,
         )
 
-    def _write_position_deletes(self, data_paths: List[str], bound: BooleanExpression) -> List[Dict[str, Any]]:
+    def _write_position_deletes(self, tasks: List[FileScanTask], bound: BooleanExpression) -> List[Dict[str, Any]]:
         """Write sorted position-delete parquet for rows matching ``bound``
-        in the given data files, using Spark's _metadata virtual column
-        for (file, row_index). Returns content=1 DataFile dicts."""
-        from ..io.write import collect_file_stats, _list_parquet_files
-
-        spark = self._spark()
-        schema = self._schema()
-        src = spark.read.schema(schema.to_spark()).parquet(*data_paths)
-        matched = (
-            src.withColumn("_f", F.col("_metadata.file_path"))
-            .withColumn("_p", F.col("_metadata.row_index"))
-            .where(F.coalesce(to_spark_column(bound), F.lit(False)))
-            .select(F.col("_f").alias("file_path"), F.col("_p").alias("pos"))
+        in the given tasks' data files, using the reader's (file,
+        row_index) lineage. Returns content=1 DataFile dicts."""
+        src = _read_tasks(self._spark(), self.metadata, tasks, self._schema(), lineage=True)
+        matched = src.where(F.coalesce(to_spark_column(bound), F.lit(False))).select(
+            F.col("_ips_file").alias("file_path"), F.col("_ips_pos").alias("pos")
         )
         return self._write_pos_delete_rows(matched)
 
@@ -2008,32 +2136,20 @@ class Transaction:
         bound = bind(delete_filter, schema)
         if isinstance(bound, AlwaysFalse):
             return
-        parent = self._parent()
-        all_entries = self.table._live_entries(parent)
-        entries = [e for e in all_entries if e["data_file"].get("content", 0) == CONTENT_DATA]
-        existing_deletes = [
-            (e["sequence_number"], e["data_file"]["file_path"], e["data_file"].get("file_size_in_bytes", -1))
-            for e in all_entries
-            if e["data_file"].get("content", 0) == 1
-        ]
-        existing_eq_deletes = [
-            (
-                e["sequence_number"],
-                e["data_file"]["file_path"],
-                tuple(e["data_file"].get("equality_ids") or ()),
-                e["data_file"].get("file_size_in_bytes", -1),
-            )
-            for e in all_entries
-            if e["data_file"].get("content", 0) == 2
-        ]
+        all_entries = self.table._live_entries(self._parent())
+        deletes = _DeleteIndex(all_entries)
         inclusive = inclusive_metrics_evaluator(bound)
         strict = strict_metrics_evaluator(bound)
 
         full_delete: List[Dict[str, Any]] = []
-        partial: List[Dict[str, Any]] = []
-        partial_seqs: List[int] = []
-        for e in entries:
+        # partially-matching files, each with its pre-existing position
+        # and equality deletes, so neither a rewrite nor new position
+        # deletes resurrect or re-delete rows deleted under merge-on-read
+        partial: List[FileScanTask] = []
+        for e in all_entries:
             df_ = e["data_file"]
+            if df_.get("content", 0) != CONTENT_DATA:
+                continue
             spec = self.metadata.spec_by_id(df_.get("spec_id", self.metadata.default_spec_id))
             res = compute_residual(spec, schema, bound, df_.get("partition", {}))
             if isinstance(res, AlwaysFalse):
@@ -2041,20 +2157,19 @@ class Transaction:
             if isinstance(res, AlwaysTrue) or strict(df_):
                 full_delete.append(df_)
             elif inclusive(df_):
-                partial.append(df_)
-                partial_seqs.append(e["sequence_number"])
+                partial.append(deletes.task(df_, AlwaysTrue(), e["sequence_number"]))
 
         added: List[Dict[str, Any]] = []
         rewritten_paths: Set[str] = set()
         if partial and mode == "merge-on-read":
-            non_parquet = {d.get("file_format", "PARQUET") for d in partial} - {"PARQUET"}
+            non_parquet = {t.data_file.get("file_format", "PARQUET") for t in partial} - {"PARQUET"}
             if non_parquet:
                 raise NotImplementedError(
                     f"merge-on-read delete over {sorted(non_parquet)} data files needs per-row "
                     "positions, which Spark's reader only exposes for parquet "
                     "(_metadata.row_index); use mode='copy-on-write'"
                 )
-            delete_files = self._write_position_deletes([d["file_path"] for d in partial], bound)
+            delete_files = self._write_position_deletes(partial, bound)
             removed = {d["file_path"] for d in full_delete}
             if not removed and not delete_files:
                 return
@@ -2067,43 +2182,14 @@ class Transaction:
             )
             return
         if partial:
-            paths = [d["file_path"] for d in partial]
             spark = self._spark()
-            # read the partial files with their pre-existing position AND
-            # equality deletes applied per-file (exact sequence-number
-            # applicability via the shared lineage reader), so the rewrite
-            # doesn't resurrect rows already deleted under merge-on-read
-            partial_tasks = [
-                FileScanTask(
-                    d,
-                    AlwaysTrue(),
-                    delete_files=tuple(pth for dseq, pth, _sz in existing_deletes if dseq >= s),
-                    sequence_number=s,
-                    eq_delete_files=tuple(
-                        (pth, fids) for dseq, pth, fids, _sz in existing_eq_deletes if dseq > s
-                    ),
-                    delete_sizes=tuple(sz for dseq, _pth, sz in existing_deletes if dseq >= s),
-                    eq_delete_sizes=tuple(sz for dseq, _pth, _f, sz in existing_eq_deletes if dseq > s),
-                )
-                for d, s in zip(partial, partial_seqs)
-            ]
-            any_deletes = any(t.delete_files or t.eq_delete_files for t in partial_tasks)
+            any_deletes = any(t.delete_files or t.eq_delete_files for t in partial)
+            # v3 rewrites must PRESERVE row ids (spec: materialize _row_id
+            # into rewritten files; null = inherit from the new file's
+            # base, so already-materialized ids win)
             v3_lineage = self.metadata.format_version >= 3
-            if v3_lineage:
-                # v3 rewrites must PRESERVE row ids (spec: materialize
-                # _row_id into rewritten files; null = inherit from the
-                # new file's base, so already-materialized ids win)
-                from pyspark.sql import types as T
-
-                src = self._lineage_df(
-                    partial_tasks,
-                    extra_spark_fields=[T.StructField("_row_id", T.LongType())],
-                )
-                src = _with_materialized_row_ids(spark, src, partial, partial_seqs)
-                src = src.drop("_ips_file", "_ips_pos")
-            else:
-                src = self._lineage_df(partial_tasks).drop("_ips_file", "_ips_pos")
-            n_before = src.count() if any_deletes else sum(d["record_count"] for d in partial)
+            src = _read_tasks(spark, self.metadata, partial, schema, row_ids=v3_lineage)
+            n_before = src.count() if any_deletes else sum(t.data_file["record_count"] for t in partial)
             pred = to_spark_column(bound)
             # keep rows where the predicate is NOT true (null-safe complement,
             # reference io/pyarrow.py:1093 _expression_to_complementary_pyarrow)
@@ -2120,7 +2206,7 @@ class Transaction:
                     _rm(f["file_path"], spark)
                 added = []
             else:
-                rewritten_paths = set(paths)
+                rewritten_paths = {t.file_path for t in partial}
 
         removed = {d["file_path"] for d in full_delete} | rewritten_paths
         if not removed and not added:
@@ -2325,20 +2411,7 @@ class Transaction:
                 # rewrite (tgt is key-pruned, so it can't provide them)
                 aff_tasks = [t for t in tasks if t.file_path in affected]
                 keep_cols = list(schema.column_names) + (["_row_id"] if v3_lineage else [])
-                if v3_lineage:
-                    from pyspark.sql import types as T
-
-                    keep_src = self._lineage_df(
-                        aff_tasks, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-                    )
-                    keep_src = _with_materialized_row_ids(
-                        self._spark(),
-                        keep_src,
-                        [t.data_file for t in aff_tasks],
-                        [t.sequence_number for t in aff_tasks],
-                    )
-                else:
-                    keep_src = self._lineage_df(aff_tasks)
+                keep_src = _read_tasks(self._spark(), self.metadata, aff_tasks, schema, row_ids=v3_lineage)
                 keep = keep_src.join(upd_keys, join_cols, "left_anti").select(*keep_cols)
                 parts.append(keep)
                 upd_cols = [src[c] for c in schema.column_names]
@@ -2372,132 +2445,25 @@ class Transaction:
         """Rows of the given tasks for a rewrite (compaction/z-order):
         on v3 tables the resolved _row_id rides along so rewrites
         preserve row identity (spec: rewritten files materialize ids)."""
-        if self.metadata.format_version >= 3:
-            from pyspark.sql import types as T
-
-            df = self._lineage_df(
-                tasks, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-            )
-            df = _with_materialized_row_ids(
-                self._spark(), df, [t.data_file for t in tasks], [t.sequence_number for t in tasks]
-            )
-            return df.drop("_ips_file", "_ips_pos")
-        return self._lineage_df(tasks).drop("_ips_file", "_ips_pos")
+        return _read_tasks(
+            self._spark(), self.metadata, tasks, self._schema(), row_ids=self.metadata.format_version >= 3
+        )
 
     def _target_with_lineage(
         self, match_filter: BooleanExpression, with_row_ids: bool = False
     ) -> Tuple[List["FileScanTask"], DataFrame]:
         """Plan + read the pruned target WITH ``_ips_file``/``_ips_pos``
-        row lineage, existing position deletes applied (shared by the CoW
-        and MoR upsert paths). ``with_row_ids`` adds a resolved v3
-        ``_row_id`` column (materialized-or-inherited)."""
+        row lineage, existing deletes applied (shared by the CoW and MoR
+        upsert paths). ``with_row_ids`` adds a resolved v3 ``_row_id``
+        column (materialized-or-inherited)."""
         scan = DataScan(self.table, match_filter, ("*",), True, None, None, self._scan_ref())
         tasks = scan.plan_files(self.metadata)
-        if not with_row_ids:
-            return tasks, self._lineage_df(tasks, match_filter)
-        from pyspark.sql import types as T
-
-        df = self._lineage_df(
-            tasks, match_filter, extra_spark_fields=[T.StructField("_row_id", T.LongType())]
-        )
-        df = _with_materialized_row_ids(
-            self._spark(), df, [t.data_file for t in tasks], [t.sequence_number for t in tasks]
-        )
-        return tasks, df
-
-    def _lineage_df(
-        self,
-        tasks: List["FileScanTask"],
-        row_filter: Optional[BooleanExpression] = None,
-        extra_spark_fields: Sequence["T.StructField"] = (),
-    ) -> DataFrame:
-        """Read the given tasks with ``_ips_file``/``_ips_pos`` lineage
-        columns, applicable position deletes anti-joined away, and an
-        optional row filter. ``extra_spark_fields``: optional physical
-        columns (v3 materialized ``_row_id``; NULL where absent)."""
         schema = self._schema()
-        spark = self._spark()
-        from pyspark.sql import types as T
-
-        if not tasks:
-            empty = T.StructType(
-                schema.to_spark().fields
-                + list(extra_spark_fields)
-                + [T.StructField("_ips_file", T.StringType()), T.StructField("_ips_pos", T.LongType())]
-            )
-            return spark.createDataFrame([], empty)
-        read_schema = T.StructType(list(schema.to_spark().fields) + list(extra_spark_fields))
-        by_fmt: Dict[str, List["FileScanTask"]] = {}
-        for t in tasks:
-            by_fmt.setdefault(t.data_file.get("file_format", "PARQUET").upper(), []).append(t)
-        fmt_dfs = []
-        for fmt, fmt_tasks in sorted(by_fmt.items()):
-            part = _read_paths(spark, read_schema, fmt, [t.file_path for t in fmt_tasks])
-            # capture lineage from the scan relation directly — the
-            # _metadata pseudo-column is not resolvable after a union.
-            # _metadata.row_index is PARQUET-ONLY in Spark: non-parquet
-            # files get a NULL position, which is fine until something
-            # position-based (a pos-delete apply or write) needs it —
-            # that case raises loudly instead of matching nothing.
-            if fmt == "PARQUET":
-                pos = F.col("_metadata.row_index")
-            else:
-                if any(t.delete_files for t in fmt_tasks):
-                    raise NotImplementedError(
-                        f"position deletes over {fmt} data files need per-row positions, "
-                        "which Spark's reader only exposes for parquet (_metadata.row_index)"
-                    )
-                pos = F.lit(None).cast("long")
-            fmt_dfs.append(
-                part.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn("_ips_pos", pos)
-            )
-        df = fmt_dfs[0]
-        for extra in fmt_dfs[1:]:
-            df = df.unionByName(extra)
-        delete_paths = sorted({p for t in tasks for p in t.delete_files})
-        threshold = _delete_broadcast_threshold(self.metadata)
-        if delete_paths:
-            dels = _pos_deletes_df(spark, delete_paths)
-            df = df.join(
-                _maybe_broadcast(dels, _pos_delete_total_bytes(tasks), threshold),
-                (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                "left_anti",
-            )
-        eq_sets = {es for t in tasks for es in t.eq_delete_files}
-        if eq_sets:
-            # sound as a union: a file grouped here may see an eq delete
-            # that is not strictly newer only if another task's is — but
-            # upsert/delete rewrites re-apply live rows, so extra matches
-            # would drop rows; keep exactness by grouping
-            by_eq: Dict[Tuple, List[FileScanTask]] = {}
-            for t in tasks:
-                by_eq.setdefault(t.eq_delete_files, []).append(t)
-            eq_sizes = _eq_delete_size_map(tasks)
-            if len(by_eq) == 1:
-                df = _apply_equality_deletes(
-                    spark, df, next(iter(by_eq)), schema, sizes=eq_sizes, threshold=threshold
-                )
-            else:
-                parts = []
-                for eq_set, grp in by_eq.items():
-                    sub = self._lineage_df(
-                        [_dc_replace(t, eq_delete_files=(), eq_delete_sizes=()) for t in grp],
-                        None,
-                        extra_spark_fields=extra_spark_fields,
-                    )
-                    parts.append(
-                        _apply_equality_deletes(
-                            spark, sub, eq_set, schema, sizes=eq_sizes, threshold=threshold
-                        )
-                    )
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-        if row_filter is not None:
-            bound = bind(row_filter, schema)
-            if not isinstance(bound, AlwaysTrue):
-                df = df.where(to_spark_column(bound))
-        return df
+        df = _read_tasks(self._spark(), self.metadata, tasks, schema, lineage=True, row_ids=with_row_ids)
+        bound = bind(match_filter, schema)
+        if not isinstance(bound, AlwaysTrue):
+            df = df.where(to_spark_column(bound))
+        return tasks, df
 
     def _upsert_eq_delete(
         self,
@@ -2890,6 +2856,76 @@ def _bound_refs(expr: BooleanExpression) -> Set[str]:
     return out
 
 
+class _ScanPlanning:
+    """The work every planner of one scan shares, done once: the bound
+    row filter, the manifest list, the per-spec partition-filter
+    projections and the delete index. The driver-side and distributed
+    task-list planners and the streamed distributed read all start from
+    it, so a scan reads its manifest list once."""
+
+    def __init__(self, metadata: TableMetadata, snap: Snapshot, schema: Schema, bound: BooleanExpression):
+        self.metadata = metadata
+        self.snap = snap
+        self.schema = schema
+        self.bound = bound
+        self._part_filters: Dict[int, BooleanExpression] = {}
+
+    @cached_property
+    def manifests(self) -> List[Dict[str, Any]]:
+        return read_manifest_list(self.snap.manifest_list, self.metadata.spec_by_id, self.schema)
+
+    @cached_property
+    def est_entries(self) -> int:
+        return sum(
+            m["added_files_count"] + m["existing_files_count"]
+            for m in self.manifests
+            if m.get("content", CONTENT_DATA) == CONTENT_DATA
+        )
+
+    def distributed(self) -> bool:
+        """Distributed planning for huge tables (SURVEY.md §7 M5): above
+        ``read.plan.distributed-threshold`` manifest entries, pruning runs
+        as a Spark job over the manifest parquets instead of a driver
+        loop — manifests ARE DataFrames here, which is why they are
+        parquet not Avro."""
+        return self.est_entries > int(self.metadata.properties.get("read.plan.distributed-threshold", "200000"))
+
+    def part_filter(self, spec_id: int) -> BooleanExpression:
+        """The row filter projected into a spec's partition space, cached
+        per spec (reference :2669-2686)."""
+        if spec_id not in self._part_filters:
+            spec = self.metadata.spec_by_id(spec_id)
+            self._part_filters[spec_id] = spec.inclusive_projection(self.schema, self.bound)
+        return self._part_filters[spec_id]
+
+    def pruned_manifests(self) -> Iterable[Tuple[Dict[str, Any], BooleanExpression]]:
+        """Data manifests whose partition summaries may match the filter,
+        each with its spec's partition filter."""
+        for m in self.manifests:
+            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
+                continue
+            pf = self.part_filter(m["spec_id"])
+            if isinstance(pf, AlwaysFalse):
+                continue
+            if not isinstance(pf, AlwaysTrue) and m.get("partition_summaries"):
+                if not manifest_evaluator(m["partition_summaries"])(pf):
+                    continue
+            yield m, pf
+
+    @cached_property
+    def deletes(self) -> _DeleteIndex:
+        """The delete side stays driver-side in every planner: delete
+        files are orders of magnitude fewer than data files (the
+        asymmetry the reference's DeleteFileIndex relies on). Built on
+        first use, so scans that match no file never walk it."""
+        entries: List[Dict[str, Any]] = []
+        for m in self.manifests:
+            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
+                spec = self.metadata.spec_by_id(m["spec_id"])
+                entries += read_manifest(m["manifest_path"], self.schema, spec, manifest=m)
+        return _DeleteIndex(e for e in entries if e["status"] != STATUS_DELETED)
+
+
 class DataScan:
     """Immutable scan builder (reference table/__init__.py:1876 BaseScan,
     :2227 DataScan)."""
@@ -2911,6 +2947,7 @@ class DataScan:
         self.snapshot_id = snapshot_id
         self.limit = limit
         self.use_ref = use_ref
+        self._plan_memo: Optional[Tuple[TableMetadata, Optional[_ScanPlanning]]] = None
 
     def _replace(self, **kw) -> "DataScan":
         args = dict(
@@ -3026,6 +3063,28 @@ class DataScan:
             )
         return tasks
 
+    def _server_planned(self, metadata: TableMetadata) -> bool:
+        return metadata.properties.get("scan-planning-mode", "client") == "server" and hasattr(
+            self.table.catalog, "plan_table_scan"
+        )
+
+    def _planning(self, metadata: TableMetadata) -> Optional["_ScanPlanning"]:
+        """The scan's shared planning state under ``metadata`` (None when
+        there is nothing to read: no snapshot, or a filter that binds to
+        AlwaysFalse). Remembered per metadata object, so the streamed-read
+        check and ``plan_files`` of one ``to_df`` share it."""
+        if self._plan_memo is not None and self._plan_memo[0] is metadata:
+            return self._plan_memo[1]
+        plan = None
+        snap = self._snapshot(metadata)
+        if snap is not None:
+            schema = self._scan_schema(metadata, snap)
+            bound = bind(self.row_filter, schema, self.case_sensitive)
+            if not isinstance(bound, AlwaysFalse):
+                plan = _ScanPlanning(metadata, snap, schema, bound)
+        self._plan_memo = (metadata, plan)
+        return plan
+
     def plan_files(self, metadata: Optional[TableMetadata] = None) -> List[FileScanTask]:
         """Snapshot -> manifest-list -> manifest -> file pruning
         (reference ManifestGroupPlanner.plan_files :2622-2667):
@@ -3035,74 +3094,17 @@ class DataScan:
            files;
         3. a residual is attached per file."""
         metadata = metadata or self.table.metadata
-        snap = self._snapshot(metadata)
-        if snap is None:
+        plan = self._planning(metadata)
+        if plan is None:
             return []
-        schema = self._scan_schema(metadata, snap)
-        bound = bind(self.row_filter, schema, self.case_sensitive)
-        if isinstance(bound, AlwaysFalse):
-            return []
-        if metadata.properties.get("scan-planning-mode", "client") == "server" and hasattr(
-            self.table.catalog, "plan_table_scan"
-        ):
-            return self._plan_files_server(snap, bound)
-        manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
-
-        # cache per-spec projections/evaluators (reference :2669-2686)
-        part_filter_by_spec: Dict[int, BooleanExpression] = {}
+        if self._server_planned(metadata):
+            return self._plan_files_server(plan.snap, plan.bound)
+        if plan.distributed():
+            return self._plan_files_distributed(plan)
+        schema, bound = plan.schema, plan.bound
         metrics_eval = inclusive_metrics_evaluator(bound)
-
-        def part_filter(spec_id: int) -> BooleanExpression:
-            if spec_id not in part_filter_by_spec:
-                spec = metadata.spec_by_id(spec_id)
-                part_filter_by_spec[spec_id] = spec.inclusive_projection(schema, bound)
-            return part_filter_by_spec[spec_id]
-
-        # Distributed planning for huge tables (SURVEY.md §7 M5): when the
-        # manifest entry count is large, pruning runs as a Spark job over
-        # the manifest parquets instead of a driver loop — manifests ARE
-        # DataFrames here, which is why they are parquet not Avro.
-        threshold = int(metadata.properties.get("read.plan.distributed-threshold", "200000"))
-        est_entries = sum(
-            m["added_files_count"] + m["existing_files_count"]
-            for m in manifest_files
-            if m.get("content", CONTENT_DATA) == CONTENT_DATA
-        )
-        if est_entries > threshold:
-            return self._plan_files_distributed(metadata, schema, bound, manifest_files, part_filter, metrics_eval)
-
-        # delete-file index: (sequence_number, path) of live position
-        # deletes plus (seq, path, fids) of equality deletes (reference
-        # DeleteFileIndex, table/delete_file_index.py:105 — ours matches
-        # by sequence number; path disjointness makes the pos anti-join
-        # exact regardless)
-        deletes: List[Tuple[int, str, int]] = []
-        eq_deletes: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d = e["data_file"]
-                    sz = d.get("file_size_in_bytes", -1)
-                    if d.get("content", 0) == 2:
-                        eq_deletes.append(
-                            (e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        deletes.append((e["sequence_number"], d["file_path"], sz))
-
         tasks: List[FileScanTask] = []
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                continue
-            pf = part_filter(m["spec_id"])
-            if isinstance(pf, AlwaysFalse):
-                continue
-            if not isinstance(pf, AlwaysTrue) and m.get("partition_summaries"):
-                if not manifest_evaluator(m["partition_summaries"])(pf):
-                    continue  # manifest pruned by partition summaries
+        for m, pf in plan.pruned_manifests():
             spec = metadata.spec_by_id(m["spec_id"])
             pf_eval = None if isinstance(pf, AlwaysTrue) else expression_evaluator(pf)
             for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
@@ -3116,27 +3118,10 @@ class DataScan:
                 res = compute_residual(spec, schema, bound, d.get("partition", {}))
                 if isinstance(res, AlwaysFalse):
                     continue
-                seq = e["sequence_number"]
-                applicable = tuple(path for dseq, path, _sz in deletes if dseq >= seq)
-                applicable_eq = tuple(
-                    (path, fids) for dseq, path, fids, _sz in eq_deletes if dseq > seq
-                )
-                tasks.append(
-                    FileScanTask(
-                        d,
-                        res,
-                        delete_files=applicable,
-                        sequence_number=seq,
-                        eq_delete_files=applicable_eq,
-                        delete_sizes=tuple(sz for dseq, _p, sz in deletes if dseq >= seq),
-                        eq_delete_sizes=tuple(sz for dseq, _p, _f, sz in eq_deletes if dseq > seq),
-                    )
-                )
+                tasks.append(plan.deletes.task(d, res, e["sequence_number"]))
         return tasks
 
-    def _plan_files_distributed(
-        self, metadata, schema, bound, manifest_files, part_filter, metrics_eval
-    ) -> List[FileScanTask]:
+    def _plan_files_distributed(self, plan: "_ScanPlanning") -> List[FileScanTask]:
         """Manifest pruning as a Spark job: read all (summary-surviving)
         manifests as one DataFrame per spec, evaluate BOTH the projected
         partition filter (on the JSON-parsed partition tuple) and the
@@ -3145,37 +3130,11 @@ class DataScan:
         stats blobs never cross to the driver, so the collect is
         O(surviving files x ~100 bytes), the floor for feeding
         spark.read.parquet(*paths)."""
-        from pyspark.sql import types as T
+        from .manifests import _partition_from_json
 
-        from ..manifests_distributed import (  # local import avoids cycle
-            json_storage_spark_type,
-            metrics_spark_predicate,
-        )
-
-        spark = self.table.spark
-        # delete manifests stay driver-side (orders of magnitude fewer)
-        deletes: List[Tuple[int, str, int]] = []
-        eq_deletes: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        by_spec: Dict[int, List[Dict[str, Any]]] = {}
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d_ = e["data_file"]
-                    sz = d_.get("file_size_in_bytes", -1)
-                    if d_.get("content", 0) == 2:
-                        eq_deletes.append(
-                            (e["sequence_number"], d_["file_path"], tuple(d_.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        deletes.append((e["sequence_number"], d_["file_path"], sz))
-            else:
-                by_spec.setdefault(m["spec_id"], []).append(m)
-
+        schema, bound = plan.schema, plan.bound
         tasks: List[FileScanTask] = []
-        for spec_id, spec, df in self._pruned_entry_dfs(metadata, schema, bound, by_spec, part_filter):
+        for spec_id, spec, df in self._pruned_entry_dfs(plan):
             rows = df.select(
                 "file_path",
                 "sequence_number",
@@ -3192,13 +3151,10 @@ class DataScan:
                 F.get_json_object("stats_json", "$.name_map").alias("_nm_json"),
                 F.get_json_object("stats_json", "$.first_row_id").cast("long").alias("_first_row_id"),
             ).collect()
-            from .manifests import _partition_from_json
-
-            # Residuals and delete applicability depend only on the partition
-            # value / sequence number, not the file — cache per distinct value
-            # so driver CPU is O(partitions + snapshots), not O(files).
+            # Residuals depend only on the partition value, not the file —
+            # cache per distinct value so driver CPU is O(partitions), not
+            # O(files) (the delete index caches per sequence number).
             part_cache: Dict[str, Tuple[Dict[str, Any], Any]] = {}
-            del_cache: Dict[int, Tuple[Tuple, ...]] = {}
             for r in rows:
                 hit = part_cache.get(r.partition_json or "")
                 if hit is None:
@@ -3222,30 +3178,10 @@ class DataScan:
                     d["name_map"] = {int(k): v for k, v in json.loads(r._nm_json).items()}
                 if r._first_row_id is not None:
                     d["first_row_id"] = r._first_row_id
-                dhit = del_cache.get(r.sequence_number)
-                if dhit is None:
-                    dhit = (
-                        tuple(path for dseq, path, _sz in deletes if dseq >= r.sequence_number),
-                        tuple((path, fids) for dseq, path, fids, _sz in eq_deletes if dseq > r.sequence_number),
-                        tuple(sz for dseq, _p, sz in deletes if dseq >= r.sequence_number),
-                        tuple(sz for dseq, _p, _f, sz in eq_deletes if dseq > r.sequence_number),
-                    )
-                    del_cache[r.sequence_number] = dhit
-                applicable, applicable_eq, applicable_sz, applicable_eq_sz = dhit
-                tasks.append(
-                    FileScanTask(
-                        d,
-                        res,
-                        delete_files=applicable,
-                        sequence_number=r.sequence_number,
-                        eq_delete_files=applicable_eq,
-                        delete_sizes=applicable_sz,
-                        eq_delete_sizes=applicable_eq_sz,
-                    )
-                )
+                tasks.append(plan.deletes.task(d, res, r.sequence_number))
         return tasks
 
-    def _pruned_entry_dfs(self, metadata, schema, bound, by_spec, part_filter):
+    def _pruned_entry_dfs(self, plan: "_ScanPlanning"):
         """Per-spec DataFrames of SURVIVING manifest entries — manifest
         summary pruning driver-side (cheap, O(manifests)), then
         partition-tuple + metrics pruning as Catalyst predicates on
@@ -3259,20 +3195,13 @@ class DataScan:
         )
 
         spark = self.table.spark
-        for spec_id, group in by_spec.items():
-            pf = part_filter(spec_id)
-            if isinstance(pf, AlwaysFalse):
-                continue
-            spec = metadata.spec_by_id(spec_id)
-            # manifest-level pruning by partition summaries first (driver, cheap)
-            survivors = []
-            for m in group:
-                if not isinstance(pf, AlwaysTrue) and m.get("partition_summaries"):
-                    if not manifest_evaluator(m["partition_summaries"])(pf):
-                        continue
-                survivors.append(m)
-            if not survivors:
-                continue
+        schema, bound = plan.schema, plan.bound
+        by_spec: Dict[int, List[Dict[str, Any]]] = {}
+        for m, _pf in plan.pruned_manifests():
+            by_spec.setdefault(m["spec_id"], []).append(m)
+        for spec_id, survivors in by_spec.items():
+            pf = plan.part_filter(spec_id)
+            spec = plan.metadata.spec_by_id(spec_id)
             # parquet manifests read natively; spec Avro manifests
             # (write.metadata.format=avro / other-engine tables) decode
             # on executors into the same row layout
@@ -3305,7 +3234,7 @@ class DataScan:
                 df = df.where(metrics_spark_predicate(bound, "stats_json"))
             yield spec_id, spec, df
 
-    def _to_df_streaming_distributed(self, metadata, snap, schema, projected):
+    def _to_df_streaming_distributed(self, plan: "_ScanPlanning", projected: Schema):
         """Distributed planning that STAYS distributed into the read
         (SCALE.md r08 known limit; VERDICT r08 #2): above the
         distributed-planning threshold, the pruning job's surviving
@@ -3345,61 +3274,12 @@ class DataScan:
         import posixpath
         import uuid as _uuid
 
+        metadata, schema, bound = plan.metadata, plan.schema, plan.bound
         props = metadata.properties
         if str(props.get("read.plan.distributed-read", "true")).lower() != "true":
             return None
-        if props.get("scan-planning-mode", "client") == "server" and hasattr(
-            self.table.catalog, "plan_table_scan"
-        ):
+        if self._server_planned(metadata) or not plan.distributed():
             return None
-        bound = bind(self.row_filter, schema, self.case_sensitive)
-        if isinstance(bound, AlwaysFalse):
-            return None
-        manifest_files = read_manifest_list(snap.manifest_list, metadata.spec_by_id, schema)
-        threshold = int(props.get("read.plan.distributed-threshold", "200000"))
-        est_entries = sum(
-            m["added_files_count"] + m["existing_files_count"]
-            for m in manifest_files
-            if m.get("content", CONTENT_DATA) == CONTENT_DATA
-        )
-        if est_entries <= threshold:
-            return None
-        # MoR: the DELETE side of the index stays driver-side (orders of
-        # magnitude fewer files than data — the same asymmetry the
-        # reference's DeleteFileIndex relies on,
-        # table/delete_file_index.py:105); the deletes themselves are
-        # READ executor-side and anti-joined after the planned scan, so
-        # the data-file list still never touches the driver. Built only
-        # AFTER the threshold gate — below-threshold scans must not pay
-        # a delete-manifest walk they will repeat in plan_files.
-        pos_dels: List[Tuple[int, str, int]] = []
-        eq_dels: List[Tuple[int, str, Tuple[int, ...], int]] = []
-        for m in manifest_files:
-            if m.get("content", CONTENT_DATA) != CONTENT_DATA:
-                spec_d = metadata.spec_by_id(m["spec_id"])
-                for e in read_manifest(m["manifest_path"], schema, spec_d, manifest=m):
-                    if e["status"] == STATUS_DELETED:
-                        continue
-                    d = e["data_file"]
-                    sz = d.get("file_size_in_bytes", -1)
-                    if d.get("content", 0) == 2:
-                        eq_dels.append(
-                            (e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), sz)
-                        )
-                    else:
-                        pos_dels.append((e["sequence_number"], d["file_path"], sz))
-
-        part_filter_by_spec: Dict[int, BooleanExpression] = {}
-
-        def part_filter(spec_id: int) -> BooleanExpression:
-            if spec_id not in part_filter_by_spec:
-                spec = metadata.spec_by_id(spec_id)
-                part_filter_by_spec[spec_id] = spec.inclusive_projection(schema, bound)
-            return part_filter_by_spec[spec_id]
-
-        by_spec: Dict[int, List[Dict[str, Any]]] = {}
-        for m in manifest_files:
-            by_spec.setdefault(m["spec_id"], []).append(m)
         spark = self.table.spark
         cols = [
             "file_path",
@@ -3413,10 +3293,7 @@ class DataScan:
         # column names in stats_json; flag them here (tiny boolean per
         # row) instead of shipping the stats blob into the path manifest
         nm_flag = F.coalesce(F.col("stats_json").contains('"name_map"'), F.lit(False))
-        dfs = [
-            df.select(*cols, nm_flag.alias("has_name_map"))
-            for _sid, _spec, df in self._pruned_entry_dfs(metadata, schema, bound, by_spec, part_filter)
-        ]
+        dfs = [df.select(*cols, nm_flag.alias("has_name_map")) for _sid, _spec, df in self._pruned_entry_dfs(plan)]
         from pyspark.sql import types as T
 
         out_schema = T.StructType(
@@ -3435,7 +3312,7 @@ class DataScan:
             "scan-plans",
             f"{int(time.time() * 1000)}-{_uuid.uuid4().hex}",
         )
-        n_manifest_parts = int(min(64, est_entries // 50_000 + 1))
+        n_manifest_parts = int(min(64, plan.est_entries // 50_000 + 1))
         try:
             union.repartition(n_manifest_parts).write.mode("overwrite").parquet(plan_dir)
         except Exception:
@@ -3473,7 +3350,8 @@ class DataScan:
         for t_ in _bound_refs(bound):
             needed.add(t_)
         # equality-delete keys must be read to evaluate the anti-join
-        for _dseq, _p, _fids, _sz in eq_dels:
+        deletes = plan.deletes
+        for _dseq, _p, _fids, _sz in deletes.eq:
             for fid in _fids:
                 try:
                     needed.add(schema.find_field(fid).name)
@@ -3513,13 +3391,13 @@ class DataScan:
         avg = max(1, (info["bytes"] or 0) // n_files)
         max_tasks = int(props.get("read.plan.max-tasks", "100000"))
         files_per_task = max(1, min(int(mpb // avg), 1000), math.ceil(n_files / max_tasks))
-        mor = bool(pos_dels or eq_dels)
+        mor = bool(deletes.pos or deletes.eq)
         self._streaming_plan_info = {
             "n_files": int(n_files),
             "plan_dir": plan_dir,
             "files_per_task": int(files_per_task),
-            "n_pos_deletes": len(pos_dels),
-            "n_eq_deletes": len(eq_dels),
+            "n_pos_deletes": len(deletes.pos),
+            "n_eq_deletes": len(deletes.eq),
         }
 
         from ..spark_datasource import register_data_source
@@ -3543,7 +3421,7 @@ class DataScan:
             .load()
         )
         if mor:
-            out = self._apply_streamed_deletes(spark, out, schema, pos_dels, eq_dels)
+            out = self._apply_streamed_deletes(spark, out, schema, deletes)
         if not isinstance(bound, AlwaysTrue):
             out = out.where(to_spark_column(bound))
         out = out.select(*[F.col(f.name) for f in projected.fields])
@@ -3551,7 +3429,7 @@ class DataScan:
             out = out.limit(self.limit)
         return out
 
-    def _apply_streamed_deletes(self, spark, out, schema, pos_dels, eq_dels):
+    def _apply_streamed_deletes(self, spark, out, schema, deletes: _DeleteIndex):
         """Executor-side delete application for the streamed MoR read:
         position deletes (parquet or DV Puffin) anti-join on the
         synthesized (_ips_file, _ips_pos); equality deletes anti-join on
@@ -3564,16 +3442,16 @@ class DataScan:
         size-guarded threshold — nothing delete-side transits the
         driver."""
         threshold = _delete_broadcast_threshold(self.table.metadata)
-        if pos_dels:
-            dels = _pos_deletes_df(spark, sorted({p for _s, p, _z in pos_dels}))
-            sizes = [sz for _s, _p, sz in pos_dels]
+        if deletes.pos:
+            dels = _pos_deletes_df(spark, sorted({p for _s, p, _z in deletes.pos}))
+            sizes = [sz for _s, _p, sz in deletes.pos]
             total = sum(sizes) if all(sz >= 0 for sz in sizes) else None
             cond = (
                 _norm_lineage_file(dels["file_path"]) == F.col("_ips_file")
             ) & (dels["pos"] == F.col("_ips_pos"))
             out = out.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
         by_fids: Dict[Tuple[int, ...], List[Tuple[int, str, int]]] = {}
-        for dseq, path, fids, sz in eq_dels:
+        for dseq, path, fids, sz in deletes.eq:
             if fids:
                 by_fids.setdefault(tuple(fids), []).append((dseq, path, sz))
         for fids, items in sorted(by_fids.items()):
@@ -3609,159 +3487,22 @@ class DataScan:
         return self._to_df_of(self.table.metadata, row_lineage=row_lineage)
 
     def _to_df_of(self, metadata: TableMetadata, row_lineage: bool = False) -> DataFrame:
-        spark = self.table.spark
-        snap = self._snapshot(metadata)
-        schema = self._scan_schema(metadata, snap)
-        projected = self.projection(metadata)
+        schema = self._scan_schema(metadata, self._snapshot(metadata))
+        projected = schema.select(*self.selected_fields, case_sensitive=self.case_sensitive)
         if row_lineage and metadata.format_version < 3:
             raise ValueError("row lineage needs a format-version 3 table (next-row-id)")
-        if not row_lineage and snap is not None:
-            streamed = self._to_df_streaming_distributed(metadata, snap, schema, projected)
+        plan = self._planning(metadata)
+        if not row_lineage and plan is not None:
+            streamed = self._to_df_streaming_distributed(plan, projected)
             if streamed is not None:
                 return streamed
         tasks = self.plan_files(metadata)
-        if not tasks:
-            out_schema = projected.to_spark()
-            if row_lineage:
-                from pyspark.sql import types as T
-
-                out_schema = T.StructType(
-                    out_schema.fields
-                    + [
-                        T.StructField("_row_id", T.LongType()),
-                        T.StructField("_last_updated_sequence_number", T.LongType()),
-                    ]
-                )
-            return spark.createDataFrame([], schema=out_schema)
-
-        # group by (file schema, format, applicable equality deletes) for
-        # field-ID-correct reads (schema evolution: renamed/added columns
-        # resolved per group, reference ArrowProjectionVisitor
-        # io/pyarrow.py:1931). Equality deletes are part of the key
-        # because they apply to a file only when strictly newer; the
-        # position-delete anti-join is exact under any grouping (file
-        # paths are disjoint) so it stays group-unioned.
-        groups: Dict[Tuple, List[FileScanTask]] = {}
-        for t in tasks:
-            key = (
-                t.data_file.get("schema_id", schema.schema_id),
-                t.data_file.get("file_format", "PARQUET"),
-                t.eq_delete_files,
-                tuple(sorted((t.data_file.get("name_map") or {}).items())),
-            )
-            groups.setdefault(key, []).append(t)
-
-        need_filter = not all(isinstance(t.residual, AlwaysTrue) for t in tasks)
-        bound = bind(self.row_filter, schema, self.case_sensitive) if need_filter else None
-
-        dfs = []
-        for (schema_id, fmt, eq_set, name_map), group in groups.items():
-            file_schema = metadata.schema_by_id(schema_id)
-            if name_map:
-                # name-mapped foreign files: physical column names differ;
-                # read under the file's names (same ids/types), then
-                # _align_to_schema renames back by field id
-                renames = dict(name_map)
-                file_schema = Schema(
-                    *[
-                        _dc_replace(f, name=renames.get(f.field_id, f.name))
-                        for f in file_schema.fields
-                    ],
-                    schema_id=file_schema.schema_id,
-                )
-            if row_lineage:
-                from pyspark.sql import types as T
-
-                # read any materialized _row_id (v3 rewrites preserve row
-                # ids by writing them; NULL where absent) and capture
-                # physical lineage BEFORE joins/projections lose the
-                # _metadata pseudo-column
-                df = _read_data(
-                    spark,
-                    file_schema,
-                    fmt,
-                    [t.file_path for t in group],
-                    extra_spark_fields=[T.StructField("_row_id", T.LongType())],
-                )
-                df = (
-                    df.withColumnRenamed("_row_id", "_ips_mat_row_id")
-                    .withColumn("_ips_lineage_file", F.col("_metadata.file_path"))
-                    .withColumn("_ips_lineage_pos", F.col("_metadata.row_index"))
-                )
-            else:
-                df = _read_data(spark, file_schema, fmt, [t.file_path for t in group])
-            delete_paths = sorted({p for t in group for p in t.delete_files})
-            threshold = _delete_broadcast_threshold(metadata)
-            if fmt.upper() != "PARQUET" and (delete_paths or row_lineage):
-                raise NotImplementedError(
-                    f"per-row positions over {fmt} data files (position deletes / row "
-                    "lineage) need Spark's parquet-only _metadata.row_index"
-                )
-            if delete_paths:
-                # MoR: drop positions listed in delete files via an
-                # anti-join on (_metadata.file_path, row_index) —
-                # broadcast-hinted only under the metadata size threshold
-                dels = _pos_deletes_df(spark, delete_paths)
-                df = (
-                    df.withColumn("_ips_file", F.col("_metadata.file_path"))
-                    .withColumn("_ips_pos", F.col("_metadata.row_index"))
-                    .join(
-                        _maybe_broadcast(dels, _pos_delete_total_bytes(group), threshold),
-                        (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                        "left_anti",
-                    )
-                    .drop("_ips_file", "_ips_pos")
-                )
-            if eq_set:
-                df = _apply_equality_deletes(
-                    spark, df, eq_set, file_schema,
-                    sizes=_eq_delete_size_map(group), threshold=threshold,
-                )
-            df = _align_to_schema(
-                df,
-                file_schema,
-                schema,
-                passthrough=(
-                    ("_ips_mat_row_id", "_ips_lineage_file", "_ips_lineage_pos")
-                    if row_lineage
-                    else ()
-                ),
-            )
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        if bound is not None and not isinstance(bound, AlwaysTrue):
-            out = out.where(to_spark_column(bound))
-        sel = [F.col(f.name) for f in projected.fields]
-        if row_lineage:
-            # v3 row lineage: _row_id = the file's assigned first-row-id +
-            # physical position; _last_updated_sequence_number = the file's
-            # data sequence number (spec implicit lineage columns). The
-            # per-file bases broadcast-join on the scheme-normalized path.
-            lineage_rows = [
-                (
-                    _strip_uri_scheme(t.file_path),
-                    t.data_file.get("first_row_id"),
-                    t.sequence_number,
-                )
-                for t in tasks
-            ]
-            lmap = spark.createDataFrame(lineage_rows, "lfile: string, lfirst: long, lseq: long")
-            out = out.join(
-                F.broadcast(lmap),
-                _norm_lineage_file(F.col("_ips_lineage_file")) == F.col("lfile"),
-                "left",
-            )
-            sel += [
-                # materialized ids (v3 rewrite preservation) win; null
-                # inherits file base + physical position (spec)
-                F.coalesce(
-                    F.col("_ips_mat_row_id"), F.col("lfirst") + F.col("_ips_lineage_pos")
-                ).alias("_row_id"),
-                F.col("lseq").alias("_last_updated_sequence_number"),
-            ]
-        out = out.select(*sel)
+        out = _read_tasks(self.table.spark, metadata, tasks, schema, row_ids=row_lineage)
+        if not all(isinstance(t.residual, AlwaysTrue) for t in tasks) and not isinstance(plan.bound, AlwaysTrue):
+            out = out.where(to_spark_column(plan.bound))
+        out = out.select(
+            *projected.column_names, *(("_row_id", "_last_updated_sequence_number") if row_lineage else ())
+        )
         if self.limit is not None:
             out = out.limit(self.limit)
         return out
@@ -3779,58 +3520,11 @@ class DataScan:
             else:
                 to_read.append(t)
         if to_read:
-            metadata = self.table.metadata
-            snap = self._snapshot(metadata)
-            schema = self._scan_schema(metadata, snap)
-            bound = bind(self.row_filter, schema, self.case_sensitive)
-            spark = self.table.spark
-            by_grp: Dict[Tuple, List[FileScanTask]] = {}
-            for t in to_read:
-                by_grp.setdefault(
-                    (
-                        t.data_file.get("file_format", "PARQUET"),
-                        t.eq_delete_files,
-                        tuple(sorted((t.data_file.get("name_map") or {}).items())),
-                    ),
-                    [],
-                ).append(t)
-            for (fmt, eq_set, name_map), grp in by_grp.items():
-                read_schema = schema
-                if name_map:
-                    renames = dict(name_map)
-                    read_schema = Schema(
-                        *[_dc_replace(f, name=renames.get(f.field_id, f.name)) for f in schema.fields],
-                        schema_id=schema.schema_id,
-                    )
-                df = _read_data(spark, read_schema, fmt, [t.file_path for t in grp])
-                delete_paths = sorted({p for t in grp for p in t.delete_files})
-                threshold = _delete_broadcast_threshold(self.table.metadata)
-                if fmt.upper() != "PARQUET" and delete_paths:
-                    raise NotImplementedError(
-                        f"position deletes over {fmt} data files need Spark's "
-                        "parquet-only _metadata.row_index"
-                    )
-                if delete_paths:
-                    dels = _pos_deletes_df(spark, delete_paths)
-                    df = (
-                        df.withColumn("_ips_file", F.col("_metadata.file_path"))
-                        .withColumn("_ips_pos", F.col("_metadata.row_index"))
-                        .join(
-                            _maybe_broadcast(dels, _pos_delete_total_bytes(grp), threshold),
-                            (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
-                            "left_anti",
-                        )
-                    )
-                if eq_set:
-                    df = _apply_equality_deletes(
-                        spark, df, eq_set, read_schema,
-                        sizes=_eq_delete_size_map(grp), threshold=threshold,
-                    )
-                if name_map:
-                    df = _align_to_schema(df, read_schema, schema)
-                if not isinstance(bound, AlwaysTrue):
-                    df = df.where(to_spark_column(bound))
-                total += df.count()
+            plan = self._planning(self.table.metadata)
+            df = _read_tasks(self.table.spark, plan.metadata, to_read, plan.schema)
+            if not isinstance(plan.bound, AlwaysTrue):
+                df = df.where(to_spark_column(plan.bound))
+            total += df.count()
         if self.limit is not None:
             total = min(total, self.limit)
         return total
@@ -4037,28 +3731,8 @@ class IncrementalAppendScan:
         meta = self.table.metadata
         schema = meta.schema()
         projected = schema.select(*self.selected_fields)
-        tasks = self.plan_files()
-        spark = self.table.spark
-        if not tasks:
-            return spark.createDataFrame([], schema=projected.to_spark())
-        # group by commit-time (schema, format) and project by field id —
-        # files appended before a rename must not read as NULL
-        groups: Dict[Tuple[int, str], List[str]] = {}
-        for t in tasks:
-            groups.setdefault(
-                (
-                    t.data_file.get("schema_id", schema.schema_id),
-                    t.data_file.get("file_format", "PARQUET").upper(),
-                ),
-                [],
-            ).append(t.file_path)
-        dfs = []
-        for (sid, fmt), paths in sorted(groups.items()):
-            file_schema = meta.schema_by_id(sid)
-            dfs.append(_align_to_schema(_read_data(spark, file_schema, fmt, paths), file_schema, schema))
-        df = dfs[0]
-        for x in dfs[1:]:
-            df = df.unionByName(x)
+        # files appended before a rename resolve by field id, never NULL
+        df = _read_tasks(self.table.spark, meta, self.plan_files(), schema)
         bound = bind(self.row_filter, schema)
         if not isinstance(bound, AlwaysTrue):
             df = df.where(to_spark_column(bound))
@@ -4133,39 +3807,12 @@ class IncrementalChangelogScan:
             return out
 
         def read_files(file_map, paths, with_lineage: bool = False) -> DataFrame:
-            """Read data files grouped by their COMMIT-TIME schema (and
-            format), each group projected to the current schema by field
-            id — a column renamed inside the scan range would otherwise
-            silently read as NULL (the same per-file-schema handling the
-            main DataScan does). ``with_lineage`` captures
-            (_ips_file, _ips_pos) on each scan relation before the union."""
-            groups: Dict[Tuple[int, str], List[str]] = {}
-            for p in paths:
-                d = file_map[p]
-                groups.setdefault(
-                    (d.get("schema_id", schema.schema_id), d.get("file_format", "PARQUET").upper()),
-                    [],
-                ).append(p)
-            out_parts: List[DataFrame] = []
-            for (sid, fmt), ps in sorted(groups.items()):
-                file_schema = meta.schema_by_id(sid)
-                df = _read_data(spark, file_schema, fmt, ps)
-                passthrough: Tuple[str, ...] = ()
-                if with_lineage:
-                    if fmt != "PARQUET":
-                        raise NotImplementedError(
-                            f"changelog position-delete recovery over {fmt} files needs "
-                            "Spark's parquet-only _metadata.row_index"
-                        )
-                    df = df.withColumn("_ips_file", F.col("_metadata.file_path")).withColumn(
-                        "_ips_pos", F.col("_metadata.row_index")
-                    )
-                    passthrough = ("_ips_file", "_ips_pos")
-                out_parts.append(_align_to_schema(df, file_schema, schema, passthrough=passthrough))
-            out = out_parts[0]
-            for x in out_parts[1:]:
-                out = out.unionByName(x)
-            return out
+            """Rows of data files, each under its commit-time schema
+            projected by field id (a column renamed inside the scan range
+            must not read as NULL); ``with_lineage`` keeps (_ips_file,
+            _ips_pos)."""
+            tasks = [FileScanTask(file_map[p], AlwaysTrue()) for p in paths]
+            return _read_tasks(spark, meta, tasks, schema, lineage=with_lineage)
 
         parts: List[DataFrame] = []
         prev = by_content(

@@ -371,3 +371,61 @@ def test_orc_through_distributed_planner(cat, spark):
     out = scan.to_df()
     assert out.count() == 15 and {r.b for r in out.collect()} == {i * 3 for i in range(5, 20)}
     assert not hasattr(scan, "_streaming_plan_info")
+
+
+def test_to_df_reads_manifest_list_once(cat, spark, monkeypatch):
+    """Below the distributed threshold, the threshold check and the
+    task-list planner share one manifest-list read."""
+    import iceberg_python_spark.table as tbl
+
+    df = spark.range(20).select("id", (F.col("id") * 2).alias("v"))
+    t = cat.create_table("db.read_list_once", schema_from_spark(df.schema))
+    t.append(df)
+    t = cat.load_table("db.read_list_once")
+    calls = []
+    real = tbl.read_manifest_list
+
+    def counting(*a, **k):
+        calls.append(a[0])
+        return real(*a, **k)
+
+    monkeypatch.setattr(tbl, "read_manifest_list", counting)
+    assert t.scan(row_filter="id < 5").to_df().count() == 5
+    assert len(calls) == 1
+
+
+def test_delete_index_parity_driver_vs_distributed(cat, spark):
+    """Driver-side and distributed planning match delete files to data
+    files identically: position deletes apply at delete seq >= data seq,
+    equality deletes only when strictly newer."""
+    df = spark.range(30).select("id", (F.col("id") % 3).alias("g"))
+    t = cat.create_table(
+        "db.del_index_parity",
+        schema_from_spark(df.schema),
+        properties={"read.plan.distributed-threshold": "1000000"},
+    )
+    t.append(df.where("id < 10"))
+    t.delete("id = 3", mode="merge-on-read")
+    t.append(df.where("id >= 10 and id < 20"))
+    t.add_equality_deletes(spark.createDataFrame([(5,), (12,), (25,)], "id: long"), ["id"])
+    t.append(df.where("id >= 20"))
+    t.delete("id = 21", mode="merge-on-read")
+    t = cat.load_table("db.del_index_parity")
+
+    def deletes_by_file(tasks):
+        return {
+            x.file_path: (x.sequence_number, sorted(x.delete_files), sorted(x.eq_delete_files))
+            for x in tasks
+        }
+
+    driver = deletes_by_file(t.scan().plan_files())
+    t.metadata.properties["read.plan.distributed-threshold"] = "0"
+    dist = deletes_by_file(t.scan().plan_files())
+    assert driver == dist
+    with_eq = [path for path, (_s, _p, eq) in driver.items() if eq]
+    without_eq = [path for path, (_s, _p, eq) in driver.items() if not eq]
+    assert with_eq and without_eq  # the newest append is not eq-deleted
+    assert all(pos for _s, pos, _e in driver.values())
+    assert sorted(r.id for r in t.scan().to_df().collect()) == [
+        i for i in range(30) if i not in (3, 5, 12, 21)
+    ]

@@ -97,6 +97,33 @@ def test_add_files_idless_aliased_names_via_mapping(catalog, spark, tmp_path):
     assert got == {5, 6}
 
 
+@pytest.mark.parametrize("op", ["cow_delete", "upsert", "incremental_scan"])
+def test_add_files_name_mapped_column_survives_rewrites(catalog, spark, tmp_path, op):
+    """An added file whose physical column ``legacy_v`` maps to field
+    ``v``: a copy-on-write delete or upsert rewrite carries its rows
+    with their ``v`` values, and an incremental append scan reads them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = schema_from_spark(spark.createDataFrame([], "id: long, v: double").schema)
+    mapping = '[{"field-id": 1, "names": ["id"]}, {"field-id": 2, "names": ["v", "legacy_v"]}]'
+    t = catalog.create_table("db.addnm_rw", schema, properties={PROPERTY_KEY: mapping})
+    p = str(tmp_path / "legacy.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], pa.int64()), "legacy_v": [10.0, 20.0, 30.0]}), p)
+    t.add_files([p])
+    if op == "incremental_scan":
+        rows = t.incremental_append_scan().to_df().collect()
+        assert {r.id: r.v for r in rows} == {1: 10.0, 2: 20.0, 3: 30.0}
+        return
+    if op == "cow_delete":
+        t.delete("id = 2", mode="copy-on-write")
+        expected = {1: 10.0, 3: 30.0}
+    else:
+        t.upsert(spark.createDataFrame([(2, 22.0)], "id: long, v: double"), join_cols=["id"])
+        expected = {1: 10.0, 2: 22.0, 3: 30.0}
+    assert {r.id: r.v for r in t.scan().to_df().collect()} == expected
+
+
 def test_add_files_unmappable_column_rejected(catalog, spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -2331,6 +2331,36 @@ def test_isolated_scaled_session_private_conf(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_isolated_scaled_session_ignores_transient_scaled_width(spark):
+    """The clone's clamp ceiling is the parent's session width, never a
+    width a concurrent scaled_shuffle section lowered for its duration:
+    the parent conf is read under the scaled-shuffle lock."""
+    import threading
+
+    from iceberg_python_spark.operators._local import isolated_scaled_session, scaled_shuffle
+
+    before = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    entered, release = threading.Event(), threading.Event()
+
+    def hold_lowered_width():
+        with scaled_shuffle(spark, 2):
+            entered.set()
+            release.wait(30)
+
+    holder = threading.Thread(target=hold_lowered_width)
+    holder.start()
+    assert entered.wait(30)
+    out = {}
+    cloner = threading.Thread(target=lambda: out.update(s=isolated_scaled_session(spark, 10**9)))
+    cloner.start()
+    cloner.join(0.5)
+    release.set()
+    holder.join(30)
+    cloner.join(30)
+    assert not holder.is_alive() and not cloner.is_alive()
+    assert int(out["s"].conf.get("spark.sql.shuffle.partitions")) == before > 2
+
+
 def test_rebind_cross_session_roundtrip(spark):
     """r18: rebind() hands a checkpointed frame to a session clone and
     back via a transient global temp view; values are identical, the
