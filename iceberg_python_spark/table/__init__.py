@@ -129,6 +129,10 @@ class FileScanTask:
     # size-guarded broadcast decision when deletes are applied.
     delete_sizes: Tuple[int, ...] = ()
     eq_delete_sizes: Tuple[int, ...] = ()
+    # schema id each equality-delete file was written under, parallel to
+    # eq_delete_files (None = unknown): its key columns are read by the
+    # names they had then
+    eq_delete_schema_ids: Tuple[Optional[int], ...] = ()
 
     @property
     def file_path(self) -> str:
@@ -246,14 +250,15 @@ class _DeleteIndex:
     O(distinct sequence numbers), not O(data files)."""
 
     def __init__(self, entries: Iterable[Dict[str, Any]]):
-        #: (seq, path, bytes) and (seq, path, equality ids, bytes)
+        #: (seq, path, bytes) and (seq, path, equality ids, bytes, schema id)
         self.pos: List[Tuple[int, str, int]] = []
-        self.eq: List[Tuple[int, str, Tuple[int, ...], int]] = []
+        self.eq: List[Tuple[int, str, Tuple[int, ...], int, Optional[int]]] = []
         for e in entries:
             d = e["data_file"]
             size = d.get("file_size_in_bytes", -1)
             if d.get("content", 0) == 2:
-                self.eq.append((e["sequence_number"], d["file_path"], tuple(d.get("equality_ids") or ()), size))
+                fids = tuple(d.get("equality_ids") or ())
+                self.eq.append((e["sequence_number"], d["file_path"], fids, size, d.get("schema_id")))
             elif d.get("content", 0) == 1:
                 self.pos.append((e["sequence_number"], d["file_path"], size))
         self._by_seq: Dict[int, Dict[str, Tuple]] = {}
@@ -262,12 +267,13 @@ class _DeleteIndex:
         deletes = self._by_seq.get(seq)
         if deletes is None:
             pos = [(path, size) for dseq, path, size in self.pos if dseq >= seq]
-            eq = [((path, fids), size) for dseq, path, fids, size in self.eq if dseq > seq]
+            eq = [e[1:] for e in self.eq if e[0] > seq]
             deletes = self._by_seq[seq] = {
                 "delete_files": tuple(p for p, _ in pos),
                 "delete_sizes": tuple(s for _, s in pos),
-                "eq_delete_files": tuple(k for k, _ in eq),
-                "eq_delete_sizes": tuple(s for _, s in eq),
+                "eq_delete_files": tuple((path, fids) for path, fids, _, _ in eq),
+                "eq_delete_sizes": tuple(size for _, _, size, _ in eq),
+                "eq_delete_schema_ids": tuple(sid for _, _, _, sid in eq),
             }
         return FileScanTask(data_file, residual, sequence_number=seq, **deletes)
 
@@ -312,35 +318,68 @@ def _metadata_format(meta: "TableMetadata") -> str:
     return fmt
 
 
+def _eq_delete_keys(
+    spark: SparkSession,
+    metadata: TableMetadata,
+    files: Iterable[Tuple[str, Optional[int]]],
+    fids: Tuple[int, ...],
+    names: Sequence[str],
+    fallback: Schema,
+) -> DataFrame:
+    """Key rows of equality-delete ``files`` ((path, schema id) pairs) for
+    one equality-field set, as columns ``names``. Each file is read under
+    the schema it was written with, so a key column renamed or dropped
+    since still reads; ``fallback`` stands in for a missing or unknown
+    schema id."""
+    by_sid: Dict[Optional[int], List[str]] = {}
+    for path, sid in files:
+        by_sid.setdefault(sid, []).append(path)
+    dels = None
+    known = {s.schema_id: s for s in metadata.schemas}
+    for sid, paths in by_sid.items():
+        written = known.get(sid, fallback)
+        read_schema = Schema(*[written.find_field(fid) for fid in fids]).to_spark()
+        part = spark.read.schema(read_schema).parquet(*sorted(paths)).toDF(*names)
+        dels = part if dels is None else dels.unionByName(part)
+    return dels
+
+
 def _apply_equality_deletes(
     spark: SparkSession,
+    metadata: TableMetadata,
     df: DataFrame,
-    eq_sets: Iterable[Tuple[str, Tuple[int, ...]]],
+    tasks: Sequence[FileScanTask],
     schema: Schema,
-    sizes: Optional[Dict[str, int]] = None,
     threshold: int = DELETE_BROADCAST_THRESHOLD_DEFAULT,
 ) -> DataFrame:
-    """Drop rows matching any equality-delete file: one null-safe
-    anti-join per distinct equality-field set (reference read path
-    io/pyarrow.py applies these as Arrow filters; Spark-side this is the
-    natural left_anti). Delete keys are deduplicated before the join —
-    CDC streams repeat keys heavily. The delete side is broadcast-hinted
-    only while its metadata size (``sizes``: path -> bytes) stays under
-    ``threshold``; past that AQE picks the strategy."""
-    by_fids: Dict[Tuple[int, ...], Set[str]] = {}
-    for path, fids in eq_sets:
-        if fids:
-            by_fids.setdefault(tuple(fids), set()).add(path)
-    for fids, paths in sorted(by_fids.items()):
-        fields = [schema.find_field(fid) for fid in fids]
-        cols = [f.name for f in fields]
-        del_schema = Schema(*fields).to_spark()
-        dels = spark.read.schema(del_schema).parquet(*sorted(paths)).dropDuplicates(cols)
+    """Drop rows of ``df`` (columns named by ``schema``) matching any
+    equality-delete file of ``tasks``: one null-safe anti-join per
+    distinct equality-field set (reference read path io/pyarrow.py
+    applies these as Arrow filters; Spark-side this is the natural
+    left_anti). Keys are matched by field id; a key field ``schema``
+    lacks (added after the data was written) reads as NULL. Delete keys
+    are deduplicated before the join — CDC streams repeat keys heavily.
+    The delete side is broadcast-hinted only while its metadata size
+    stays under ``threshold``; past that AQE picks the strategy."""
+    sizes = _eq_delete_size_map(tasks)
+    by_fids: Dict[Tuple[int, ...], Dict[str, Optional[int]]] = {}
+    for t in tasks:
+        sids = t.eq_delete_schema_ids or (None,) * len(t.eq_delete_files)
+        for (path, fids), sid in zip(t.eq_delete_files, sids):
+            if fids:
+                by_fids.setdefault(tuple(fids), {})[path] = sid
+    for fids, files in sorted(by_fids.items()):
+        names = [f"_ips_eq_{fid}" for fid in fids]
+        dels = _eq_delete_keys(spark, metadata, files.items(), fids, names, schema).dropDuplicates(names)
         cond = None
-        for c in cols:
-            clause = df[c].eqNullSafe(dels[c])
+        for fid, c in zip(fids, names):
+            try:
+                key = df[schema.find_field(fid).name]
+            except ValueError:
+                key = F.lit(None)
+            clause = key.eqNullSafe(dels[c])
             cond = clause if cond is None else cond & clause
-        total = sum(sizes[p] for p in paths) if sizes is not None and all(p in sizes for p in paths) else None
+        total = sum(sizes[p] for p in files) if sizes is not None and all(p in sizes for p in files) else None
         df = df.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
     return df
 
@@ -472,10 +511,10 @@ def _read_tasks(
     Tasks are grouped by (file schema id, format, name map, applicable
     equality deletes). Each group is read under its commit-time schema
     (name-mapped files under their physical column names), position
-    deletes are anti-joined on (_metadata.file_path, row_index), the
+    deletes are anti-joined on (_metadata.file_path, row_index),
+    equality deletes on the key columns matched by field id, and the
     group is projected onto ``target`` by field id (renames, promotions,
-    added columns — reference ArrowProjectionVisitor io/pyarrow.py:1931)
-    and its equality deletes are anti-joined on the aligned key columns.
+    added columns — reference ArrowProjectionVisitor io/pyarrow.py:1931).
     Equality deletes are part of the group key because they apply to a
     file only when strictly newer; the position-delete anti-join is exact
     under any grouping (file paths are disjoint).
@@ -547,13 +586,10 @@ def _read_tasks(
                 (F.col("_ips_file") == dels.file_path) & (F.col("_ips_pos") == dels.pos),
                 "left_anti",
             )
-        passthrough = (["_row_id"] if row_ids else []) + (["_ips_file", "_ips_pos"] if keep_pos else [])
-        df = _align_to_schema(df, file_schema, target, passthrough=passthrough)
         if eq_set:
-            df = _apply_equality_deletes(
-                spark, df, eq_set, target, sizes=_eq_delete_size_map(group), threshold=threshold
-            )
-        dfs.append(df)
+            df = _apply_equality_deletes(spark, metadata, df, group, file_schema, threshold=threshold)
+        passthrough = (["_row_id"] if row_ids else []) + (["_ips_file", "_ips_pos"] if keep_pos else [])
+        dfs.append(_align_to_schema(df, file_schema, target, passthrough=passthrough))
     out = dfs[0]
     for extra_df in dfs[1:]:
         out = out.unionByName(extra_df)
@@ -2947,7 +2983,6 @@ class DataScan:
         self.snapshot_id = snapshot_id
         self.limit = limit
         self.use_ref = use_ref
-        self._plan_memo: Optional[Tuple[TableMetadata, Optional[_ScanPlanning]]] = None
 
     def _replace(self, **kw) -> "DataScan":
         args = dict(
@@ -3069,34 +3104,34 @@ class DataScan:
         )
 
     def _planning(self, metadata: TableMetadata) -> Optional["_ScanPlanning"]:
-        """The scan's shared planning state under ``metadata`` (None when
-        there is nothing to read: no snapshot, or a filter that binds to
-        AlwaysFalse). Remembered per metadata object, so the streamed-read
-        check and ``plan_files`` of one ``to_df`` share it."""
-        if self._plan_memo is not None and self._plan_memo[0] is metadata:
-            return self._plan_memo[1]
-        plan = None
+        """The scan's planning state under ``metadata`` (None when there
+        is nothing to read: no snapshot, or a filter that binds to
+        AlwaysFalse). Callers that plan more than once hold on to it."""
         snap = self._snapshot(metadata)
-        if snap is not None:
-            schema = self._scan_schema(metadata, snap)
-            bound = bind(self.row_filter, schema, self.case_sensitive)
-            if not isinstance(bound, AlwaysFalse):
-                plan = _ScanPlanning(metadata, snap, schema, bound)
-        self._plan_memo = (metadata, plan)
-        return plan
+        if snap is None:
+            return None
+        schema = self._scan_schema(metadata, snap)
+        bound = bind(self.row_filter, schema, self.case_sensitive)
+        return None if isinstance(bound, AlwaysFalse) else _ScanPlanning(metadata, snap, schema, bound)
 
-    def plan_files(self, metadata: Optional[TableMetadata] = None) -> List[FileScanTask]:
+    def plan_files(
+        self, metadata: Optional[TableMetadata] = None, *, plan: Optional["_ScanPlanning"] = None
+    ) -> List[FileScanTask]:
         """Snapshot -> manifest-list -> manifest -> file pruning
         (reference ManifestGroupPlanner.plan_files :2622-2667):
         1. per-spec inclusive projection of the row filter into partition
            space prunes manifests via partition summaries;
         2. exact partition-tuple evaluation + min/max/null metrics prune
            files;
-        3. a residual is attached per file."""
-        metadata = metadata or self.table.metadata
-        plan = self._planning(metadata)
+        3. a residual is attached per file.
+
+        ``plan`` is planning state the caller already built with
+        ``_planning`` (``to_df`` and ``count`` pass theirs, so the
+        manifest list is read once per scan)."""
+        plan = plan or self._planning(metadata or self.table.metadata)
         if plan is None:
             return []
+        metadata = plan.metadata
         if self._server_planned(metadata):
             return self._plan_files_server(plan.snap, plan.bound)
         if plan.distributed():
@@ -3351,7 +3386,7 @@ class DataScan:
             needed.add(t_)
         # equality-delete keys must be read to evaluate the anti-join
         deletes = plan.deletes
-        for _dseq, _p, _fids, _sz in deletes.eq:
+        for _dseq, _p, _fids, _sz, _sid in deletes.eq:
             for fid in _fids:
                 try:
                     needed.add(schema.find_field(fid).name)
@@ -3421,7 +3456,7 @@ class DataScan:
             .load()
         )
         if mor:
-            out = self._apply_streamed_deletes(spark, out, schema, deletes)
+            out = self._apply_streamed_deletes(spark, metadata, out, schema, deletes)
         if not isinstance(bound, AlwaysTrue):
             out = out.where(to_spark_column(bound))
         out = out.select(*[F.col(f.name) for f in projected.fields])
@@ -3429,7 +3464,7 @@ class DataScan:
             out = out.limit(self.limit)
         return out
 
-    def _apply_streamed_deletes(self, spark, out, schema, deletes: _DeleteIndex):
+    def _apply_streamed_deletes(self, spark, metadata, out, schema, deletes: _DeleteIndex):
         """Executor-side delete application for the streamed MoR read:
         position deletes (parquet or DV Puffin) anti-join on the
         synthesized (_ips_file, _ips_pos); equality deletes anti-join on
@@ -3441,7 +3476,7 @@ class DataScan:
         read as distributed scans and broadcast only under the
         size-guarded threshold — nothing delete-side transits the
         driver."""
-        threshold = _delete_broadcast_threshold(self.table.metadata)
+        threshold = _delete_broadcast_threshold(metadata)
         if deletes.pos:
             dels = _pos_deletes_df(spark, sorted({p for _s, p, _z in deletes.pos}))
             sizes = [sz for _s, _p, sz in deletes.pos]
@@ -3450,34 +3485,32 @@ class DataScan:
                 _norm_lineage_file(dels["file_path"]) == F.col("_ips_file")
             ) & (dels["pos"] == F.col("_ips_pos"))
             out = out.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
-        by_fids: Dict[Tuple[int, ...], List[Tuple[int, str, int]]] = {}
-        for dseq, path, fids, sz in deletes.eq:
+        by_fids: Dict[Tuple[int, ...], List[Tuple[int, str, int, Optional[int]]]] = {}
+        for dseq, path, fids, sz, sid in deletes.eq:
             if fids:
-                by_fids.setdefault(tuple(fids), []).append((dseq, path, sz))
+                by_fids.setdefault(tuple(fids), []).append((dseq, path, sz, sid))
         for fids, items in sorted(by_fids.items()):
-            fields_ = [schema.find_field(fid) for fid in fids]
-            cols_ = [f.name for f in fields_]
-            del_schema = Schema(*fields_).to_spark()
+            names = [f"_ips_eq_{fid}" for fid in fids]
             # one read per distinct delete sequence number (files sharing
             # a seq read together); keep the NEWEST seq per key so a
             # re-inserted row (data seq >= old delete seq) survives
-            by_seq: Dict[int, List[str]] = {}
-            for dseq, path, _sz in items:
-                by_seq.setdefault(int(dseq), []).append(path)
+            by_seq: Dict[int, List[Tuple[str, Optional[int]]]] = {}
+            for dseq, path, _sz, sid in items:
+                by_seq.setdefault(int(dseq), []).append((path, sid))
             parts = [
-                spark.read.schema(del_schema)
-                .parquet(*sorted(paths))
-                .withColumn("_dseq", F.lit(dseq).cast("long"))
-                for dseq, paths in sorted(by_seq.items())
+                _eq_delete_keys(spark, metadata, files, fids, names, schema).withColumn(
+                    "_dseq", F.lit(dseq).cast("long")
+                )
+                for dseq, files in sorted(by_seq.items())
             ]
             dels = parts[0]
             for p in parts[1:]:
                 dels = dels.unionByName(p)
-            dels = dels.groupBy(*cols_).agg(F.max("_dseq").alias("_dseq"))
+            dels = dels.groupBy(*names).agg(F.max("_dseq").alias("_dseq"))
             cond = F.col("_ips_seq") < dels["_dseq"]
-            for c in cols_:
-                cond = cond & out[c].eqNullSafe(dels[c])
-            sizes = [sz for _s, _p, sz in items]
+            for fid, c in zip(fids, names):
+                cond = cond & out[schema.find_field(fid).name].eqNullSafe(dels[c])
+            sizes = [sz for _s, _p, sz, _sid in items]
             total = sum(sizes) if all(sz >= 0 for sz in sizes) else None
             out = out.join(_maybe_broadcast(dels, total, threshold), cond, "left_anti")
         return out
@@ -3496,7 +3529,12 @@ class DataScan:
             streamed = self._to_df_streaming_distributed(plan, projected)
             if streamed is not None:
                 return streamed
-        tasks = self.plan_files(metadata)
+        tasks = self.plan_files(plan=plan) if plan is not None else []
+        if row_lineage and any(t.data_file.get("file_format", "PARQUET").upper() != "PARQUET" for t in tasks):
+            raise NotImplementedError(
+                "row lineage over non-parquet data files needs per-row positions, "
+                "which Spark's reader only exposes for parquet (_metadata.row_index)"
+            )
         out = _read_tasks(self.table.spark, metadata, tasks, schema, row_ids=row_lineage)
         if not all(isinstance(t.residual, AlwaysTrue) for t in tasks) and not isinstance(plan.bound, AlwaysTrue):
             out = out.where(to_spark_column(plan.bound))
@@ -3511,7 +3549,8 @@ class DataScan:
         """Metadata fast path: sum record_count where the residual is
         AlwaysTrue; read only files that still need the filter
         (reference table/__init__.py:2341-2366)."""
-        tasks = self.plan_files()
+        plan = self._planning(self.table.metadata)
+        tasks = self.plan_files(plan=plan) if plan is not None else []
         total = 0
         to_read: List[FileScanTask] = []
         for t in tasks:
@@ -3520,7 +3559,6 @@ class DataScan:
             else:
                 to_read.append(t)
         if to_read:
-            plan = self._planning(self.table.metadata)
             df = _read_tasks(self.table.spark, plan.metadata, to_read, plan.schema)
             if not isinstance(plan.bound, AlwaysTrue):
                 df = df.where(to_spark_column(plan.bound))
@@ -3812,6 +3850,11 @@ class IncrementalChangelogScan:
             must not read as NULL); ``with_lineage`` keeps (_ips_file,
             _ips_pos)."""
             tasks = [FileScanTask(file_map[p], AlwaysTrue()) for p in paths]
+            if with_lineage and any(t.data_file.get("file_format", "PARQUET").upper() != "PARQUET" for t in tasks):
+                raise NotImplementedError(
+                    "changelog position-delete recovery over non-parquet files needs "
+                    "Spark's parquet-only _metadata.row_index"
+                )
             return _read_tasks(spark, meta, tasks, schema, lineage=with_lineage)
 
         parts: List[DataFrame] = []

@@ -414,7 +414,11 @@ def test_delete_index_parity_driver_vs_distributed(cat, spark):
 
     def deletes_by_file(tasks):
         return {
-            x.file_path: (x.sequence_number, sorted(x.delete_files), sorted(x.eq_delete_files))
+            x.file_path: (
+                x.sequence_number,
+                sorted(x.delete_files),
+                sorted(zip(x.eq_delete_files, x.eq_delete_schema_ids)),
+            )
             for x in tasks
         }
 

@@ -168,3 +168,49 @@ def test_upsert_eq_delete_matches_cow(spark, tmp_path_factory):
         cat.load_table("db.ups_eq").upsert(
             upd2, join_cols=["id"], mode="eq-delete", when_matched_update_all=False
         )
+
+
+@pytest.mark.parametrize("case", ["delete_then_rename", "rename_then_delete", "delete_then_drop"])
+@pytest.mark.parametrize("threshold", ["200000", "0"])
+def test_eq_delete_keys_read_under_their_own_schema(table, spark, case, threshold):
+    """Equality-delete files are read under the schema they were written
+    with and matched to data by field id: a key column renamed or dropped
+    after the delete, or renamed before it, keeps deleting the same rows
+    (driver-side and streamed distributed reads)."""
+    t = table
+    t.set_properties({"read.plan.distributed-threshold": threshold})
+    keys = {3, 42, 77}
+    if case == "rename_then_delete":
+        t.update_schema().rename_column("id", "key").commit()
+        t.refresh()
+        t.add_equality_deletes(spark.createDataFrame([(k,) for k in keys], "key: long"), ["key"])
+    else:
+        t.add_equality_deletes(spark.createDataFrame([(k,) for k in keys], "id: long"), ["id"])
+        t.refresh()
+        if case == "delete_then_rename":
+            t.update_schema().rename_column("id", "key").commit()
+        else:
+            t.update_schema().delete_column("id").commit()
+    t.refresh()
+    rows = t.scan().to_df().collect()
+    assert len(rows) == 100 - len(keys)
+    assert t.scan().count() == 100 - len(keys)
+    if case == "delete_then_drop":
+        assert {r.val for r in rows} == {float(i) for i in range(100) if i not in keys}
+    else:
+        assert {r.key for r in rows} == set(range(100)) - keys
+
+
+def test_eq_delete_on_column_added_after_data(table, spark):
+    """A key column added after a data file was written reads as NULL in
+    that file, so a NULL delete key matches the file's rows."""
+    from iceberg_python_spark.types import StringType
+
+    t = table
+    t.update_schema().add_column("tag", StringType()).commit()
+    t.refresh()
+    t.append(spark.createDataFrame([(500, 0, 5.0, "x")], "id: long, grp: int, val: double, tag: string"))
+    t.refresh()
+    t.add_equality_deletes(spark.createDataFrame([(None,)], "tag: string"), ["tag"])
+    t.refresh()
+    assert [(r.id, r.tag) for r in t.scan().to_df().collect()] == [(500, "x")]

@@ -97,11 +97,12 @@ def test_add_files_idless_aliased_names_via_mapping(catalog, spark, tmp_path):
     assert got == {5, 6}
 
 
-@pytest.mark.parametrize("op", ["cow_delete", "upsert", "incremental_scan"])
+@pytest.mark.parametrize("op", ["cow_delete", "upsert", "incremental_scan", "eq_delete"])
 def test_add_files_name_mapped_column_survives_rewrites(catalog, spark, tmp_path, op):
     """An added file whose physical column ``legacy_v`` maps to field
     ``v``: a copy-on-write delete or upsert rewrite carries its rows
-    with their ``v`` values, and an incremental append scan reads them."""
+    with their ``v`` values, an incremental append scan reads them, and
+    an equality delete on ``v`` matches them by field id."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -117,6 +118,9 @@ def test_add_files_name_mapped_column_survives_rewrites(catalog, spark, tmp_path
         return
     if op == "cow_delete":
         t.delete("id = 2", mode="copy-on-write")
+        expected = {1: 10.0, 3: 30.0}
+    elif op == "eq_delete":
+        t.add_equality_deletes(spark.createDataFrame([(20.0,)], "v: double"), ["v"])
         expected = {1: 10.0, 3: 30.0}
     else:
         t.upsert(spark.createDataFrame([(2, 22.0)], "id: long, v: double"), join_cols=["id"])

@@ -88,3 +88,34 @@ def test_bad_format_rejected(catalog, nation_df):
     t = catalog.create_table("db.badfmt", schema, properties={"write.format.default": "avro"})
     with pytest.raises(ValueError, match="write.format.default"):
         t.append(nation_df)
+
+
+def test_orc_row_lineage_raises_honestly(catalog, nation_df):
+    """v3 _row_id is first_row_id + row position, which Spark only exposes
+    for parquet: a lineage scan over ORC files must refuse, not return
+    NULL row ids."""
+    schema = schema_from_spark(nation_df.schema)
+    orc = catalog.create_table(
+        "db.orc_v3", schema, properties={"write.format.default": "orc", "format-version": "3"}
+    )
+    orc.append(nation_df)
+    orc.refresh()
+    with pytest.raises(NotImplementedError, match="row_index"):
+        orc.scan().to_df(row_lineage=True)
+
+
+def test_orc_changelog_position_delete_raises_honestly(catalog, nation_df, spark):
+    """The changelog recovers position-deleted rows by joining on row
+    positions; over ORC files (no positions in Spark's reader) it must
+    refuse rather than drop the delete rows."""
+    from iceberg_python_spark.table.snapshots import Operation
+
+    orc, _pq = _twin_tables(catalog, nation_df, partitioned=False)
+    orc.refresh()
+    path = orc.scan().plan_files()[0].file_path
+    with orc.transaction() as tx:
+        dels = tx._write_pos_delete_rows(spark.createDataFrame([(path, 0)], "file_path: string, pos: long"))
+        tx._commit_snapshot(Operation.DELETE, dels)
+    orc.refresh()
+    with pytest.raises(NotImplementedError, match="row_index"):
+        orc.incremental_changelog_scan().to_df()
